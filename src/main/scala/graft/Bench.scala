@@ -1,7 +1,4 @@
 package graft
-import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Throughput surface: every SparkEntry query timed over `Passes`
   * full passes. Pass 1 is COLD (includes building the session-shared
@@ -26,7 +23,8 @@ import org.apache.spark.sql.SparkSession
   * last clean WARM pass (falling back to the cold pass only when no
   * warm pass was clean) ride the JSON as `task_metrics` —
   * `[run_ms, gc_ms, shuffle_read_mb, shuffle_write_mb, spill_mem_mb,
-  * spill_disk_mb, pass]`, summed over tasks, with the 1-based pass
+  * spill_disk_mb, pass]`, summed over the tasks [[Trace]] tallied
+  * under the query's job group for that pass, with the 1-based pass
   * index last so a cold-pass receipt is distinguishable in the
   * artifact — so a rung-to-rung delta is
   * adjudicable from the artifact alone: flat run_ms with grown wall
@@ -67,51 +65,14 @@ object Bench {
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
   }
 
-  /** Per-task executor metrics, summed across every task that ended
-    * since startup — Bench diffs snapshots around each timed query.
-    * Listener delivery is asynchronous; [[drain]] empties the bus
-    * before each snapshot so deltas attribute to the right query.
-    */
-  private final class TaskMetricsAgg extends SparkListener {
-    private val acc = Array.fill(6)(new java.util.concurrent.atomic.AtomicLong())
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        acc(0).addAndGet(m.executorRunTime)
-        acc(1).addAndGet(m.jvmGCTime)
-        acc(2).addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        acc(3).addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        acc(4).addAndGet(m.memoryBytesSpilled)
-        acc(5).addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def snapshot: Array[Long] = acc.map(_.get)
-  }
-
-  /** Flush the async listener bus so TaskMetricsAgg has seen every
-    * task of the just-finished query. `listenerBus` is private[spark]
-    * (bench-only instrumentation, so reflection over a forked Spark
-    * accessor); any failure degrades to a short sleep — metrics are
-    * receipts, never a correctness dependency.
-    */
-  private def drain(sc: SparkContext): Unit =
-    try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } catch { case _: Throwable => Thread.sleep(50) }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the SHARED session surface (graft.Sessions): the same configs
     // Verify gates and a library consumer gets — rationale documented
     // there (r18: one builder instead of a Bench-only config block)
-    val spark = Sessions.builder(cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builderFromEnv().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = new TaskMetricsAgg
-    spark.sparkContext.addSparkListener(metrics)
+    val trace = Trace.on(spark.sparkContext)
     // absorb JVM/codegen warm-up on the BENCH dataset so per-query
     // timings are comparable (entry()'s hardcoded sf0.001 path may not
     // exist on this machine)
@@ -139,18 +100,17 @@ object Bench {
     // median below.
     val rebuilt = scala.collection.mutable.ArrayBuffer[Set[String]]()
     val memoed = scala.collection.mutable.ArrayBuffer[Set[String]]()
-    val passMetrics = scala.collection.mutable.ArrayBuffer[Map[String, Array[Long]]]()
+    val passMetrics = scala.collection.mutable.ArrayBuffer[Map[String, Trace.Tally]]()
     def runPass(): Map[String, Double] = {
       val rb = scala.collection.mutable.HashSet[String]()
       val mm = scala.collection.mutable.HashSet[String]()
-      val pm = scala.collection.mutable.HashMap[String, Array[Long]]()
+      val pm = scala.collection.mutable.HashMap[String, Trace.Tally]()
       val times = names.map { name =>
-        drain(spark.sparkContext)
+        val group = s"bench:$name:${passMetrics.size + 1}"
         val r0 = DfCache.stagingRebuilds
         val m0 = DfCache.memoComputes
-        val s0 = metrics.snapshot
         val t0 = System.nanoTime()
-        try { SparkEntry.queries(name)(spark, sfDir).count() }
+        try trace.in(group)(SparkEntry.queries(name)(spark, sfDir).count())
         catch {
           // a failing query must be VISIBLE, not timed as a fast success
           case e: Throwable =>
@@ -160,10 +120,9 @@ object Bench {
               String.valueOf(e.getMessage).replaceAll("[\\p{Cntrl}\"\\\\]", " ").take(120))
         }
         val t = (System.nanoTime() - t0) / 1e9
-        drain(spark.sparkContext)
         if (DfCache.stagingRebuilds != r0) rb += name
         if (DfCache.memoComputes != m0) mm += name
-        pm(name) = metrics.snapshot.zip(s0).map { case (a, b) => a - b }
+        pm(name) = trace.take(group)
         name -> t
       }.toMap
       rebuilt += rb.toSet
@@ -236,9 +195,10 @@ object Bench {
     val tmJson = names.map { n =>
         val cp = cleanPasses(n)
         val i = cp.filter(_ > 0).lastOption.getOrElse(cp.last)
-        val m = passMetrics(i).getOrElse(n, Array.fill(6)(0L))
-        s"\"" + n + "\":[" + m(0) + "," + m(1) + "," +
-          m.drop(2).map(mb).mkString(",") + "," + (i + 1) + "]"
+        val m = passMetrics(i).getOrElse(n, new Trace.Tally)
+        s"\"" + n + "\":[" + m.runMs + "," + m.gcMs + "," +
+          Seq(m.shuffleReadBytes, m.shuffleWriteBytes, m.spillMemBytes, m.spillDiskBytes)
+            .map(mb).mkString(",") + "," + (i + 1) + "]"
       }
       .mkString("{", ",", "}")
     // per-pass per-query raw wall times (same order as pass_totals);

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** THE session configuration surface — one builder shared by Bench,
-  * Verify, the dev probes and any library consumer, so the measured
+/** THE session configuration surface — one builder shared by every
+  * entry point (Bench, Verify, Probe, the plan/scale/audit tools), the
+  * test suite and any library consumer, so the measured
   * configuration and the verified configuration are the same object
   * (r17 verdict: the tuned configs lived only in the Bench session).
   *
@@ -37,6 +38,7 @@ import org.apache.spark.sql.SparkSession
   *  - `legacy.parquet.nanosAsLong=true` — the driver's `events.ts`
   *    is parquet TIMESTAMP(NANOS), which Spark 4 only reads as long.
   *  - session timezone UTC — the cross-engine oracle contract.
+  *  - `ui.enabled=false` — no caller serves the web UI.
   */
 object Sessions {
 
@@ -54,13 +56,14 @@ object Sessions {
     * `shuffle.partitions=cpus` (the harness contract — the driver
     * also runs at a lower core count to measure scaling) and the
     * config surface above. Callers add app-specific settings
-    * (`spark.ui.enabled`, appName) on the returned builder.
+    * (appName, directories) on the returned builder.
     */
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
@@ -78,7 +81,9 @@ object Sessions {
       // board total was a wash. Cache layout needs the per-frame
       // decision the operators already make, not a session global.
 
-  /** [[builder]] with the env-var core count the harness tools use. */
+  /** [[builder]] with the core count from `SPARK_GRAFT_CPUS` (default
+    * 4) — the one default every entry point shares.
+    */
   def builderFromEnv(): SparkSession.Builder =
     builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
 }

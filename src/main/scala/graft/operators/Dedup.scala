@@ -722,9 +722,9 @@ object Dedup {
     // caller with a different batch can never be served a stale memo.
     // STAGED cross-JVM (r16): the delta-internal group build is a
     // full pair-build + pointer-doubling fixpoint (~37 s at the 256×
-    // rung — the SplitProbe-attributed pass excursion the r15 bench
-    // showed); deterministic in the corpus, so it stages like the
-    // probe index and a fresh JVM READS it instead of recomputing
+    // rung — the r15 pass excursion; SURVEY.md, "Pass-excursion
+    // adjudication"); deterministic in the corpus, so it stages like
+    // the probe index and a fresh JVM READS it instead of recomputing
     val deltaGroups = DfCache.getOrCompute(spark, s"split_delta_groups:$dir")(
       DfCache.stagedFrame(spark, s"split_delta_groups_t08:$dir",
         DfCache.inputFingerprint(spark, s"$dir/documents.parquet"))(
@@ -920,45 +920,6 @@ object Dedup {
       })
   }
 
-  /** Dev-only sub-chain timing for IncProbe: re-times each stage of
-    * the warm incremental path against the SAME session memos the
-    * real query uses (keys match [[neardupIncremental]]'s `mat`).
-    * Returns the verified best-match count.
-    */
-  private[operators] def incProbePieces(spark: SparkSession, dir: String): Long = {
-    def t(name: String)(f: => Long): Long = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[incpiece] $name%-28s ${(System.nanoTime() - t0) / 1e9}%7.3f s rows=$n")
-      n
-    }
-    def memo(slot: String) = DfCache.getOrCompute(spark, s"neardup_$slot:$dir")(
-      sys.error(s"memo $slot should be warm"))
-    val basePosting = memo("base_rep_posting")
-    val baseBanded = memo("base_rep_banded")
-    val deltaMembers = memo("delta_members")
-    val deltaPosting = memo("delta_rep_posting")
-    t("basePosting.count")(basePosting.count())
-    t("baseBanded.count")(baseBanded.count())
-    t("deltaPosting.count")(deltaPosting.count())
-    val banded = bandedSigsOf(deltaPosting)
-    t("bandedSigs(delta)")(banded.count())
-    val cand = banded
-      .select(col("bd"), col("band_key"), col("doc_id").as("b_id"))
-      .join(baseBanded.select(col("bd"), col("band_key"), col("doc_id").as("a_id")),
-        Seq("bd", "band_key"))
-      .select(col("a_id"), col("b_id"))
-      .distinct()
-    t("cand (band join)")(cand.count())
-    val jac = jaccardOf(cand, basePosting.unionByName(deltaPosting))
-    t("jaccardOf")(jac.count())
-    val w = Window.partitionBy(col("b_id")).orderBy(col("jaccard").desc, col("a_id"))
-    val best = jac.where(col("jaccard") >= 0.8)
-      .withColumn("rk", row_number().over(w)).where(col("rk") === 1)
-    t("best-per-rep")(best.count())
-    t("member expand")(deltaMembers.join(
-      best.select(col("b_id").as("rep_id")), Seq("rep_id")).count())
-  }
-
   /** The incremental probe over arbitrary base/delta corpora — the
     * body of [[neardupIncremental]], QUOTIENTED by exact content on
     * BOTH sides like [[minhashPairsOf]]: signatures, bands and the
@@ -1001,7 +962,7 @@ object Dedup {
     // index); without the slot every consumer of the probe result —
     // the report itself AND dataset_split_incremental's assignment —
     // re-ran the signature build per invocation (~0.3 s/pass at
-    // sf0.1, IncProbe receipt).
+    // sf0.1, OPTIMIZATION_r18.md C10).
     val deltaBanded = mat("delta_rep_banded", bandedSigsOf(deltaRepPosting))
     val cand = deltaBanded
       .select(col("bd"), col("band_key"), col("doc_id").as("b_id"))
@@ -1344,8 +1305,8 @@ object Dedup {
     * so it stages as the detect-stage artifact of the simhash index
     * (the minhash family's `minhash_pairs` twin): a warm pass reads
     * parquet instead of re-running banding + XOR verify + distinct
-    * per invocation (r18; StageProbe showed the rebuild chain in
-    * every pass).
+    * per invocation (r18; the per-stage receipts showed the rebuild
+    * chain in every pass, OPTIMIZATION_r18.md C12).
     */
   private[operators] def simhashRepPairsCached(spark: SparkSession, dir: String): DataFrame =
     DfCache.getOrCompute(spark, s"simhash_rep_pairs:$dir")(

@@ -397,8 +397,9 @@ object Pack {
     // heavy curation stage here uses (the pplx_scored pattern). The
     // mix references its corpus twice (rates build + join) and every
     // un-staged reference re-runs the cutoff agg + broadcast +
-    // semi-join chain (~4 s at sf0.1 each — probed stage-by-stage
-    // with TrainPrepProbe after the first cut benched at 25.7 s).
+    // semi-join chain (~4 s at sf0.1 each — timed stage by stage
+    // after the first cut benched at 25.7 s; SURVEY.md,
+    // "pipeline_trainprep_scored staged").
     // Staging rather than a session memo + localCheckpoint (the r12
     // shape) because (a) a fresh JVM reads the artifact instead of
     // recomputing the whole curate→score→keep chain, (b) the rebuild

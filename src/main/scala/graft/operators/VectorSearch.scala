@@ -1301,8 +1301,8 @@ object VectorSearch {
       // guarantees computed-once; truncating the lineage keeps the
       // three consumer queries' task closures from serializing the
       // whole qualifying-pair + domination DAG into every near-empty
-      // read task (StageProbe: 306 ms task DESERIALIZE on a 64-task
-      // zero-shuffle proto_select pass)
+      // read task (306 ms task DESERIALIZE on a 64-task zero-shuffle
+      // proto_select pass, OPTIMIZATION_r18.md C15)
       semReportOf(semClusters(spark, dir), semMembers(spark, dir))
         .localCheckpoint())
 

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into the `private[sql]` Column↔Expression converters —
@@ -31,4 +32,10 @@ object graftBridge {
     ext.registerFunctions(
       new org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry)
   }
+
+  /** Block until every listener event posted so far has been
+    * delivered (`listenerBus` is private[spark]). A tally read after
+    * this sees every task of the jobs that have already ended.
+    */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs; mirrors Verify's config. */
+/** Shared local SparkSession for specs: the [[Sessions]] surface
+  * Verify and Bench run, at a fixed local[4].
+  */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
 
@@ -15,13 +17,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.builder("4").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
